@@ -297,6 +297,15 @@ def commit_update(
     """Apply an upsert/delete batch to the block_rows index at ``path``
     as a DELTA commit and return the reloaded index.
 
+    The batch's bookkeeping runs on the driver (``update._update_parts``):
+    it is collected and tokenized once, and the new stats, the affected
+    terms' dictionary rows, the tombstones and the new docs' doclens rows
+    are driver arithmetic.  The cluster runs only the work that scales
+    with touched blocks, plus the table writes.  Bound: ``old_docs`` holds
+    the indexed value by contract and both frames are collected, so the
+    batch must fit on the driver; a bulk change goes through
+    ``build_index`` + :func:`write_index_block_rows` instead.
+
     ``mode="surgical"``: blocks containing a tombstoned doc are decoded,
     survivors re-encoded with the new docs, old rows tombstoned — decode
     volume O(churn · terms-per-doc · block_size).  ``mode="append_only"``:
@@ -304,7 +313,7 @@ def commit_update(
     decode time by gen-aware doc tombstones (grn/Lucene deleted-docs
     semantics; Iceberg equality-delete files), deferring the block
     rewrite to :func:`compact`.  Scores are rebuild-identical either way
-    (dictionary/doclens/stats merges are exact; df/idf never read from
+    (dictionary/doclens/stats deltas are exact; df/idf never read from
     stale rows on this layout).
 
     Write amplification: appends + tombstones are churn-proportional in
@@ -339,37 +348,26 @@ def commit_update(
         n_pbuckets,
         append_only=(mode == "append_only"),
     )
-    # materialize the WHOLE delta (localCheckpoint, churn-proportional)
-    # BEFORE mutating any table: both frames read postings_rows, and the
-    # tombstones especially must snapshot the PRE-append state — a
-    # replaced doc keeps its id, so re-running touched-detection over the
-    # appended rows would tombstone the replacements themselves
-    appends = explode_to_rows(p["reenc"], gen=gen).localCheckpoint(eager=True)
+    # _update_parts has already snapshotted the touched blocks; the appends
+    # read only that snapshot and driver literals, never postings_rows, so
+    # they may be written lazily after the tables start to change.  Each
+    # pbucket's rows go to one writer task: one small file per touched
+    # pbucket instead of one per (encode task, pbucket) — half the
+    # commit's bytes were parquet footers, and every file costs readers
+    appends = explode_to_rows(p["reenc"], gen=gen).repartition(
+        spark.sparkContext.defaultParallelism, "pbucket"
+    )
+    storage.append("postings_rows", appends, partition_by=["pbucket"])
     if mode == "append_only":
-        doc_dels = (
-            p["tomb"]
-            .select("doc_id", F.lit(gen).cast("int").alias("gen"))
-            .localCheckpoint(eager=True)
-        )
-        n_new_tombs = doc_dels.count()
-        storage.append("postings_rows", appends, partition_by=["pbucket"])
+        doc_dels = p["tomb"].select("doc_id", F.lit(gen).cast("int").alias("gen"))
+        n_new_tombs = p["n_tomb"]
         if storage.exists("doc_deletes"):
             storage.append("doc_deletes", doc_dels)
         else:
             storage.create("doc_deletes", doc_dels)
     else:
-        dels = (
-            index.postings_rows.select("term", "first_doc_id", "gen")
-            .join(
-                F.broadcast(p["touched_keys"]),
-                ["term", "first_doc_id"],
-                "left_semi",
-            )
-            .localCheckpoint(eager=True)
-        )
         n_new_tombs = 0
-        storage.append("postings_rows", appends, partition_by=["pbucket"])
-        storage.append("postings_deletes", dels)
+        storage.append("postings_deletes", p["touched_keys"])
     storage.overwrite(
         "dictionary",
         p["dictionary"]
@@ -396,8 +394,6 @@ def commit_update(
     )
     for t in ("postings_rows", "postings_deletes", "dictionary", "doclens"):
         storage.refresh(t)
-    for f in p.get("cached", ()):
-        f.unpersist()
     return read_index_block_rows(spark, path, storage=storage)
 
 

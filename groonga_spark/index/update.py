@@ -7,51 +7,76 @@ mutable buffer region (``grn_ii_update_one`` / ``grn_ii_delete_one``,
 ii.c:3725).  The API therefore requires the caller to supply the old value —
 we keep that contract.
 
-On immutable columnar storage the same semantics become **segment algebra**:
+An update batch is churn-sized, so its bookkeeping runs on the DRIVER (a
+Delta Lake commit's shape) and the cluster only rewrites the blocks the
+change touches:
 
-  1. ``tombstones``  = doc ids of all replaced/deleted docs;
-  2. ``affected``    = the union of terms of the old and new content — every
-     posting row that must change lives under one of these terms, because a
-     tombstoned doc's postings appear exactly under its old content's terms;
-  3. untouched terms keep their encoded blocks BYTE-IDENTICAL — nothing
-     is rewritten.  Their build-time ``max_score`` is stale under the new
-     stats, so the returned index sets ``bounds_exact=False`` and pruning
-     consumers derive a looser-but-sound bound query-time from the stored
-     (df, max_tf) alone (idf(N', df) · tfc(max_tf, dl=1, max avgdl') —
-     :func:`derived_bound_expr`);
-  4. within affected terms, only the BLOCKS that actually contain a
-     tombstoned doc are decoded (exact metadata-only detection: a
-     bucketized range join of block [first, last] spans against the
-     tombstone set), survivors re-encoded together with the new docs'
-     postings (same path as the full build — merge_hit_blocks semantics,
-     ii.c:7578); every other block survives with its row's array filtered
-     JVM-side, no decode;
-  5. dictionary / doclens / stats are exactly recomputed by delta merge,
-     so query scores are **identical to a full rebuild** (BM25 inputs N,
-     df, tf, dl, Σdl are all exact).
+  1. the batch (old ∪ new docs, one collect) is tokenized on the driver by
+     the same kernel stage T runs in the workers (``build._doc_tf_batch``),
+     so its terms, tf, dl and positions equal a build's;
+  2. every delta is plain arithmetic on that batch: the tombstones (ids of
+     replaced/deleted docs), ``n_docs``, the per-section token totals
+     (stored total − the old content's dl + the new content's dl — exact,
+     because by contract the old value is the indexed value), the
+     ``affected`` terms (old ∪ new content's terms: a tombstoned doc's
+     postings sit exactly under its old content's terms) and their df/cf
+     deltas;
+  3. the dictionary commits as the old dictionary minus the affected terms
+     ∪ their literal new rows (old df/cf read by one pruned
+     ``term IN (...)`` lookup); doclens as the old doclens minus the
+     tombstones ∪ the new docs' literal dl rows.  BM25's inputs N, df, tf,
+     dl and Σdl are all exact, so query scores are **identical to a full
+     rebuild**;
+  4. untouched terms keep their encoded blocks BYTE-IDENTICAL.  Their
+     build-time ``max_score`` is stale under the new stats, so the result
+     sets ``bounds_exact=False`` and pruning consumers derive a looser-but-
+     sound bound query-time from the stored (df, max_tf) alone
+     (:func:`derived_bound_expr`);
+  5. within affected terms, only the BLOCKS that contain a tombstoned doc
+     are decoded (exact metadata-only detection: a bucketized range join of
+     block [first, last] spans against the broadcast tombstones); their
+     survivors are re-encoded with the new docs' postings by the build's
+     encoder (merge_hit_blocks semantics, ii.c:7578).  That decode →
+     re-encode is the only Python-heavy Spark work an update runs.
+
+Bound: the batch carries the old value by contract and is collected to the
+driver, so it must fit there — an update is churn-sized.  A bulk change (a
+large fraction of the corpus) goes through ``build_index`` + a write
+instead.
 
 Scale: decode/re-encode volume is O(churn · terms-per-doc · block_size) —
-independent of the head terms' posting-list lengths (the r3 term-granular
-shape re-encoded every posting of every affected term, and at natural-
-language churn the affected set is the Zipf head, which measured SLOWER
-than a full rebuild at 0.1% churn / 1M docs; see BASELINE.md).
+independent of the head terms' posting-list lengths (re-encoding every
+posting of every affected term measured SLOWER than a full rebuild at 0.1%
+churn / 1M docs, because at natural-language churn the affected set is the
+Zipf head; see BASELINE.md).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import scoring
+from ..hashutil import term_pbucket
+from ..tokenize import resolve_tokenizer
 from .build import (
     DEFAULT_N_PBUCKETS,
     DEFAULT_POSTINGS_PER_BUCKET,
     IndexStats,
     InvertedIndex,
+    _doc_tf_batch,
+    _pos_bytes_udf,
     encode_postings,
     salted_tf,
-    tf_stage,
 )
+
+# touched-block detection (_touched_blocks): 4096-id buckets; a block
+# spanning >= _WIDE_BKTS of them is "wide"
+_B = 1 << 12
+_WIDE_BKTS = 64
+
 
 def derived_bound_expr(n_docs: int, avgdl_max: float) -> str:
     """A sound ``max_score`` upper bound under NEW corpus stats, derivable
@@ -78,6 +103,165 @@ def derived_bound_expr(n_docs: int, avgdl_max: float) -> str:
     return f"({idf}) * ({tfc})"
 
 
+def _local(spark, rows: list, ddl: str) -> DataFrame:
+    """Driver rows as a LocalRelation (built via pandas/Arrow).  A
+    list-built frame is a Python RDD instead: every scan or broadcast of
+    it runs Python-worker tasks (measured ~250 ms a broadcast)."""
+    names = [c.split()[0] for c in ddl.split(",")]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
+    return df if rows else df.limit(0)
+
+
+def _batch_tf(docs: dict, sections: dict, tokenizer, do_stem: bool) -> pd.DataFrame:
+    """(term, doc_id, sid, tf, dl, pos_bytes) of ``docs`` ({doc id: texts
+    in section order}) — stage T's per-section kernel, run on the driver."""
+    ids = np.fromiter(docs, dtype=np.int64, count=len(docs))
+    texts = list(docs.values())
+    return pd.concat(
+        [
+            _doc_tf_batch(ids, [t[i] or "" for t in texts], sid, tokenizer, do_stem)
+            for i, sid in enumerate(sorted(sections))
+        ],
+        ignore_index=True,
+    )
+
+
+def _term_delta(tf: pd.DataFrame) -> dict:
+    """term → (df, cf) over one side of the batch."""
+    g = tf.groupby("term").agg(df=("doc_id", "nunique"), cf=("tf", "sum"))
+    return {t: (int(d), int(c)) for t, d, c in zip(g.index, g["df"], g["cf"])}
+
+
+def _touched_blocks(blk: DataFrame, tomb: DataFrame) -> DataFrame:
+    """The rows of ``blk`` whose [first_doc_id, last_doc_id] span holds a
+    tombstoned doc — exact, on block metadata only, in ONE broadcast semi
+    join (one scan; every block row emitted at most once).
+
+    Join key: a *narrow* block (dense term, spanning < _WIDE_BKTS 4096-id
+    buckets) keys by its first bucket, and each tombstone is replicated
+    over the _WIDE_BKTS buckets a narrow block holding it can start in.
+    A *wide* block (a rare term whose postings straddle a large id range)
+    keys -1, which every tombstone also carries once.  The exact range
+    test then runs on the key's matches only: churn × _WIDE_BKTS rows
+    against narrow blocks, and tombstones × wide blocks (≈ one per rare
+    affected term) — churn-proportional at any corpus size."""
+    lo = (F.col("first_doc_id") / _B).cast("long")
+    hi = (F.col("last_doc_id") / _B).cast("long")
+    tb = (F.col("_tid") / _B).cast("long")
+    tombk = tomb.select(F.col("doc_id").alias("_tid")).select(
+        "_tid",
+        F.explode(
+            F.concat(
+                F.array(F.lit(-1).cast("long")),
+                F.sequence(
+                    F.greatest(tb - (_WIDE_BKTS - 1), F.lit(0).cast("long")), tb
+                ),
+            )
+        ).alias("_tkey"),
+    )
+    return (
+        blk.withColumn("_bkey", F.when(hi - lo < _WIDE_BKTS, lo).otherwise(-1))
+        .join(
+            F.broadcast(tombk),
+            (F.col("_bkey") == F.col("_tkey"))
+            & (F.col("_tid") >= F.col("first_doc_id"))
+            & (F.col("_tid") <= F.col("last_doc_id")),
+            "left_semi",
+        )
+        .drop("_bkey")
+    )
+
+
+def _surgical(
+    index: InvertedIndex,
+    affected: list,
+    aff_lit: DataFrame,
+    tomb: DataFrame,
+    n_tomb: int,
+    heavy: DataFrame,
+    cores: int,
+) -> dict:
+    """Block-surgical half of an update: snapshot the blocks of the
+    ``affected`` terms that hold a tombstoned doc and decode their
+    surviving postings (``survivors``: term, doc_id, sid, tf, dl,
+    pos_bytes).  Also returns ``touched_keys`` and, on a packed index,
+    ``untouched``/``kept_aff``."""
+    # affected blocks, pruned to the affected terms' pbuckets (directory
+    # pruning on a block-rows index) and terms
+    pbuckets = sorted({term_pbucket(t, index.n_pbuckets) for t in affected})
+    pruned = F.col("pbucket").isin(pbuckets) & F.col("term").isin(affected)
+    prows = getattr(index, "postings_rows", None)
+    if prows is not None:
+        # block-rows index: the rows ARE the table; decode needs no df
+        aff_blk = prows.filter(pruned).withColumn("df", F.lit(0).cast("long"))
+    else:
+        aff_rows = index.postings.filter(pruned)
+        aff_blk = aff_rows.select(
+            "term", "df", F.explode("blocks").alias("b")
+        ).select("term", "df", "b.*")
+    # snapshot the touched blocks BEFORE any table mutates: a replaced doc
+    # keeps its id, so detection re-run over appended rows would tombstone
+    # the replacements themselves.  A pure insert touches nothing.
+    touched = (
+        _touched_blocks(aff_blk, tomb).coalesce(cores).localCheckpoint(eager=True)
+        if n_tomb
+        else aff_blk.limit(0)
+    )
+    out = dict(
+        touched_keys=touched.select(
+            "term", "first_doc_id", *(["gen"] if prows is not None else [])
+        )
+    )
+    if prows is None:
+        # packed layout: untouched terms' rows pass through; affected rows
+        # drop their touched blocks (JVM filter) and refresh df to the new
+        # dictionary value (scores read df from the decoded rows); rows
+        # left empty (fully-deleted terms) drop
+        out["untouched"] = index.postings.join(
+            F.broadcast(aff_lit), "term", "left_anti"
+        )
+        touched_per_term = touched.groupBy("term").agg(
+            F.collect_set("first_doc_id").alias("_tb")
+        )
+        out["kept_aff"] = (
+            aff_rows.join(touched_per_term, "term", "left")
+            .join(F.broadcast(heavy), "term", "left")
+            .withColumn(
+                "blocks",
+                F.when(F.col("_tb").isNull(), F.col("blocks")).otherwise(
+                    F.expr(
+                        "filter(blocks, bb -> NOT array_contains(_tb, bb.first_doc_id))"
+                    )
+                ),
+            )
+            .withColumn("df", F.coalesce(F.col("_heavy_df"), F.lit(0)).cast("long"))
+            .withColumn(
+                "n_postings",
+                F.expr("aggregate(blocks, 0L, (a, bb) -> a + bb.n)"),
+            )
+            .drop("_tb", "_heavy_df")
+            .filter(F.size("blocks") > 0)
+        )
+
+    from ..query.decode import decoded_postings
+
+    # survivors keep their stored dl (their docs did not change), so dl
+    # rides inline and salted_tf never joins doclens
+    out["survivors"] = (
+        decoded_postings(touched, with_pos=True)
+        .join(F.broadcast(tomb), "doc_id", "left_anti")
+        .select(
+            "term",
+            "doc_id",
+            F.col("sid").cast("int").alias("sid"),
+            F.col("tf").cast("long").alias("tf"),
+            F.col("dl").cast("long").alias("dl"),
+            _pos_bytes_udf(F.col("positions")).alias("pos_bytes"),
+        )
+    )
+    return out
+
+
 def _update_parts(
     index: InvertedIndex,
     old_docs: DataFrame,
@@ -89,284 +273,147 @@ def _update_parts(
 ) -> dict:
     """Shared core of :func:`apply_update` (packed layout) and
     :func:`blockrows.commit_update` (one-block-per-row delta commit).
-    Returns every intermediate frame lazily; callers assemble the subset
-    their layout needs (the packed path unions untouched/kept/reenc, the
-    block-rows path commits ``touched_keys`` as deletes + exploded
-    ``reenc`` as appends and never computes ``untouched``/``kept_aff``).
-    """
-    text_cols = [index.stats.sections[sid] for sid in sorted(index.stats.sections)]
-    tok = index.tokenizer
 
-    # The frames below are each consumed by SEVERAL downstream subtrees
-    # (the dictionary merge feeds kept_aff, the heavy-df broadcast AND
-    # salted_tf; the tf stages feed the dictionary delta, the merge and
-    # doclens) — without a persist every materializing action recomputes
-    # the full-vocab outer join and the tokenizer UDF once PER REFERENCE,
-    # which measured as the dominant cost of an update (the arms are
-    # churn- or vocab-sized, so the caches are small by construction).
-    rem_tf, _rem_dl = tf_stage(old_docs, text_cols, tok, id_col, index.token_filters)
-    add_tf, add_dl = tf_stage(new_docs, text_cols, tok, id_col, index.token_filters)
-    rem_tf = rem_tf.persist()
-    add_tf = add_tf.persist()
-    tomb = old_docs.select(F.col(id_col).alias("doc_id")).distinct()
+    Collects and tokenizes the batch once, computes every churn-sized piece
+    (stats, dictionary delta, tombstones) on the driver, and materializes
+    (``localCheckpoint``) only the touched blocks — before the caller
+    mutates any table.  Returns the committed frames lazily: ``dictionary``
+    and ``doclens`` (old table minus the changed keys ∪ literal new rows),
+    ``stats``, ``reenc`` (re-encoded survivors + new postings, packed
+    shape), ``touched_keys`` (the touched blocks' keys — with ``gen`` on a
+    block-rows index, i.e. the rows ``postings_deletes`` takes), ``tomb``
+    (tombstoned doc ids) and ``n_tomb``; on a packed index also
+    ``untouched``/``kept_aff``.
+    ``append_only`` skips detection and decode: only the new docs' postings
+    are encoded.  The batch must fit on the driver (see the module
+    docstring)."""
+    spark = old_docs.sparkSession
+    sections = index.stats.sections
+    text_cols = [sections[sid] for sid in sorted(sections)]
 
-    # ---- doclens + stats (exact) -----------------------------------------
-    doclens = (
-        index.doclens.join(tomb, "doc_id", "left_anti")
-        .unionByName(add_dl)
-        .persist()
+    # ---- the batch: one collect, tokenized on the driver -------------------
+    def side(df: DataFrame, is_new: bool) -> DataFrame:
+        return df.select(
+            F.lit(is_new).alias("_new"),
+            F.col(id_col).cast("long").alias("_id"),
+            *[F.col(c).alias(f"_t{i}") for i, c in enumerate(text_cols)],
+        )
+
+    old, new = {}, {}
+    for r in side(old_docs, False).union(side(new_docs, True)).collect():
+        (new if r[0] else old)[r[1]] = tuple(r[2:])
+    tok = resolve_tokenizer(index.tokenizer)
+    do_stem = "stem" in index.token_filters
+    rem = _batch_tf(old, sections, tok, do_stem)
+    add = _batch_tf(new, sections, tok, do_stem)
+
+    # ---- deltas: driver arithmetic -----------------------------------------
+    tomb_ids = sorted(old)
+    rem_tok, add_tok = (
+        {int(s): int(n) for s, n in t.groupby("sid")["tf"].sum().items()}
+        for t in (rem, add)
     )
-    n_old_ids = tomb.count()
-    n_new_ids = new_docs.select(id_col).distinct().count()
-    n_docs = index.stats.n_docs - n_old_ids + n_new_ids
-    sec_rows = doclens.groupBy("sid").agg(F.sum("dl").alias("total")).collect()
+    section_tokens = {}
+    for sid in sorted(set(index.stats.section_tokens) | set(add_tok)):
+        total = (
+            index.stats.section_tokens.get(sid, 0)
+            - rem_tok.get(sid, 0)
+            + add_tok.get(sid, 0)
+        )
+        if total > 0:
+            section_tokens[sid] = total
     stats = IndexStats(
-        n_docs=int(n_docs),
-        section_tokens={int(r["sid"]): int(r["total"]) for r in sec_rows},
-        sections=dict(index.stats.sections),
+        n_docs=int(index.stats.n_docs - len(old) + len(new)),
+        section_tokens=section_tokens,
+        sections=dict(sections),
     )
     avgdl_by_sid = {sid: stats.avgdl(sid) for sid in stats.section_tokens}
+    rem_d, add_d = _term_delta(rem), _term_delta(add)
+    affected = sorted(set(rem_d) | set(add_d))
 
-    # ---- dictionary delta merge ------------------------------------------
-    rem_d = rem_tf.groupBy("term").agg(
-        F.countDistinct("doc_id").cast("long").alias("rdf"),
-        F.sum("tf").cast("long").alias("rcf"),
-    )
-    add_d = add_tf.groupBy("term").agg(
-        F.countDistinct("doc_id").cast("long").alias("adf"),
-        F.sum("tf").cast("long").alias("acf"),
-    )
-    delta = rem_d.join(add_d, "term", "full_outer")
-    merged = (
-        index.dictionary.select("term", "df", "cf")
-        .join(delta, "term", "full_outer")
-        .select(
-            "term",
-            (
-                F.coalesce("df", F.lit(0))
-                - F.coalesce("rdf", F.lit(0))
-                + F.coalesce("adf", F.lit(0))
-            ).alias("df"),
-            (
-                F.coalesce("cf", F.lit(0))
-                - F.coalesce("rcf", F.lit(0))
-                + F.coalesce("acf", F.lit(0))
-            ).alias("cf"),
+    # ---- dictionary: one pruned lookup, literal new rows -------------------
+    old_d = {
+        r["term"]: (r["df"], r["cf"])
+        for r in index.dictionary.filter(F.col("term").isin(affected))
+        .select("term", "df", "cf")
+        .collect()
+    }
+    new_d = []
+    for t in affected:
+        (df, cf), (rdf, rcf), (adf, acf) = (
+            d.get(t, (0, 0)) for d in (old_d, rem_d, add_d)
         )
-        .filter(F.col("df") > 0)
+        if df - rdf + adf > 0:
+            new_d.append((t, df - rdf + adf, cf - rcf + acf))
+    aff_lit = _local(spark, [(t,) for t in affected], "term string")
+    tomb = _local(spark, [(d,) for d in tomb_ids], "doc_id long")
+    new_dict = _local(spark, new_d, "term string, df long, cf long")
+    dictionary = (
+        index.dictionary.select("term", "df", "cf")
+        .join(F.broadcast(aff_lit), "term", "left_anti")
+        .unionByName(new_dict)
         .withColumn("rterm", F.reverse(F.col("term")))
     )
-    dictionary = merged.persist()
 
-    # ---- postings: block-surgical keep / re-encode split -----------------
-    # r4 redesign.  The r3 shape decoded + re-encoded EVERY posting of
-    # every affected term — but at natural-language churn the affected
-    # term set is the Zipf head (any churned doc contains "the"), so the
-    # touched posting volume approached the whole index and a 0.1% churn
-    # measured SLOWER than a full rebuild.  The unit of work is now the
-    # BLOCK: only blocks that actually contain a tombstoned doc are
-    # decoded and re-encoded; every other block of an affected term
-    # survives inside its row with the array filtered JVM-side (no Python
-    # decode, no Arrow crossing) and the row's ``df`` refreshed; new
-    # docs' postings append as additional rows per term (decode paths
-    # aggregate across rows, so multi-row terms and overlapping block
-    # doc-ranges are fine).  Decode volume is now
-    # O(churn · terms-per-doc · block-size), independent of the head
-    # terms' posting-list lengths — grn_ii's buffer-insert locality
-    # (ii.c:3725) re-expressed on immutable segments.
-    #
-    # Storage note: with the packed blocks-array layout a touched block
-    # still dirties its whole (term, pbucket) row on write; the
-    # one-block-per-row layout (index/blockrows.py) stores the same
-    # blocks as individual rows behind the same TableStorage seam and
-    # commits updates as churn-proportional deletes+appends (Iceberg
-    # row-level deletes) — its commit path shares this function.
-    from ..query.decode import decoded_postings
-
-    affected = delta.select("term")
-    if append_only:
-        # blockrows append-only commit: NO touched detection, NO decode —
-        # old postings stay on disk masked by gen-aware doc tombstones at
-        # decode time; only the new docs' postings are encoded.  The
-        # dictionary/doclens/stats merges above stay exact, which keeps
-        # BM25 scores rebuild-identical (df/idf read from the dictionary
-        # on this layout, never from stale rows).
-        spark = old_docs.sparkSession
-        tf2 = salted_tf(
-            add_tf,
-            doclens,
-            dictionary,
-            postings_per_bucket,
-            n_pbuckets,
-            heavy=dictionary.join(F.broadcast(affected), "term").select(
-                "term", F.col("df").alias("_heavy_df")
-            ),
-        )
-        return dict(
-            dictionary=dictionary,
-            doclens=doclens,
-            stats=stats,
-            untouched=None,
-            kept_aff=None,
-            touched_keys=spark.createDataFrame(
-                [], "term string, first_doc_id long"
-            ),
-            reenc=encode_postings(tf2, stats.n_docs, avgdl_by_sid),
-            tokenizer=tok,
-            tomb=tomb,
-            cached=[rem_tf, add_tf, doclens, dictionary],
-        )
-    prows = getattr(index, "postings_rows", None)
-    if prows is not None:
-        # block_rows-loaded index: the exploded frame IS the table — read
-        # affected blocks straight from it (df attached from the OLD
-        # dictionary, as the packed rows carry) and never touch
-        # index.postings (a full-table regroup on this layout)
-        aff_olddf = index.dictionary.join(F.broadcast(affected), "term").select(
-            "term", "df"
-        )
-        aff_blk = prows.join(F.broadcast(aff_olddf), "term")
-        untouched = aff_rows = None  # packed-only frames (see below)
-    else:
-        untouched = index.postings.join(F.broadcast(affected), "term", "left_anti")
-        aff_rows = index.postings.join(F.broadcast(affected), "term")
-        aff_blk = aff_rows.select(
-            "term", "df", F.explode("blocks").alias("b")
-        ).select("term", "df", "b.*")
-
-    # exact touched-block detection on METADATA only, split by span:
-    # *narrow* blocks (dense terms — ids packed ~block_size apart) overlap
-    # few buckets, so bucketize and equi-join tombstones by bucket, then
-    # the exact range test.  A *wide* block (a rare term whose 128
-    # postings straddle a large id range) would explode O(span/bucket)
-    # rows under that scheme — cost scaling with corpus size, not churn —
-    # so wide blocks instead broadcast-range-join the tombstones
-    # directly: both sides are churn-proportional (wide blocks ≈ one per
-    # rare affected term; tombstones = churned docs), keeping detection
-    # churn-proportional at any corpus size.
-    _B = 1 << 12
-    _WIDE_BKTS = 64
-    blk_meta = aff_blk.select("term", "first_doc_id", "last_doc_id")
-    n_bkts = (F.col("last_doc_id") / _B).cast("long") - (
-        F.col("first_doc_id") / _B
-    ).cast("long")
-    spans = blk_meta.filter(n_bkts < _WIDE_BKTS).withColumn(
-        "_bkt",
-        F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / _B).cast("long"),
-                (F.col("last_doc_id") / _B).cast("long"),
-            )
-        ),
-    )
-    tombk = tomb.select(
-        F.col("doc_id").alias("_tid"),
-        (F.col("doc_id") / _B).cast("long").alias("_bkt"),
-    )
-    touched_narrow = (
-        spans.join(tombk, "_bkt")
-        .filter(
-            (F.col("_tid") >= F.col("first_doc_id"))
-            & (F.col("_tid") <= F.col("last_doc_id"))
-        )
-        .select("term", "first_doc_id")
-    )
-    tomb_b = F.broadcast(tomb.select(F.col("doc_id").alias("_tid")))
-    touched_wide = blk_meta.filter(n_bkts >= _WIDE_BKTS).join(
-        tomb_b,
-        (F.col("_tid") >= F.col("first_doc_id"))
-        & (F.col("_tid") <= F.col("last_doc_id")),
-    ).select("term", "first_doc_id")
-    touched_keys = touched_narrow.unionByName(touched_wide).distinct().persist()
-    touched_per_term = touched_keys.groupBy("term").agg(
-        F.collect_set("first_doc_id").alias("_tb")
-    )
-
-    # kept affected rows (PACKED layout only — block_rows keeps untouched
-    # rows by never deleting them): drop touched blocks from the array
-    # (JVM filter), refresh df to the post-update dictionary value
-    # (scores read df from the decoded rows), drop rows left empty
-    # (fully-deleted terms)
-    kept_aff = None
-    if aff_rows is not None:
-        kept_aff = (
-            aff_rows.join(touched_per_term, "term", "left")
-            .join(
-                F.broadcast(dictionary.select("term", F.col("df").alias("_ndf"))),
-                "term",
-                "left",
-            )
-            .withColumn(
-                "blocks",
-                F.when(F.col("_tb").isNull(), F.col("blocks")).otherwise(
-                    F.expr(
-                        "filter(blocks, bb -> NOT array_contains(_tb, bb.first_doc_id))"
-                    )
-                ),
-            )
-            .withColumn("df", F.coalesce(F.col("_ndf"), F.lit(0)).cast("long"))
-            .withColumn(
-                "n_postings",
-                F.expr("aggregate(blocks, 0L, (a, bb) -> a + bb.n)"),
-            )
-            .drop("_tb", "_ndf")
-            .filter(F.size("blocks") > 0)
-        )
-
-    touched_blocks = aff_blk.join(
-        touched_keys, ["term", "first_doc_id"], "left_semi"
-    )
-    from .build import _pos_bytes_udf
-
-    dec = (
-        decoded_postings(touched_blocks, with_pos=True)
-        .join(tomb, "doc_id", "left_anti")
-        .select(
-            "term",
-            "doc_id",
-            "sid",
-            F.col("tf").cast("long").alias("tf"),
-            _pos_bytes_udf(F.col("positions")).alias("pos_bytes"),
+    # ---- doclens: minus tombstones, plus literal new dl rows ---------------
+    new_dl = add[["doc_id", "sid", "dl"]].drop_duplicates()
+    doclens = index.doclens.join(
+        F.broadcast(tomb), "doc_id", "left_anti"
+    ).unionByName(
+        _local(
+            spark,
+            [tuple(map(int, r)) for r in new_dl.itertuples(index=False)],
+            "doc_id long, sid int, dl long",
         )
     )
-    merged_tf = dec.unionByName(
-        add_tf.select("term", "doc_id", "sid", F.col("tf").cast("long").alias("tf"), "pos_bytes")
+
+    # ---- postings ----------------------------------------------------------
+    # every affected term's exact NEW df rides into the encode: the build's
+    # in-group df counting (salted_tf sentinel -1) assumes a group holds a
+    # term's ENTIRE postings, but these groups hold only the delta
+    heavy = new_dict.select("term", F.col("df").alias("_heavy_df"))
+    add_tf = _local(
+        spark,
+        [
+            (t, int(d), int(s), int(f), int(dl), bytes(p))
+            for t, d, s, f, dl, p in add[
+                ["term", "doc_id", "sid", "tf", "dl", "pos_bytes"]
+            ].itertuples(index=False)
+        ],
+        "term string, doc_id long, sid int, tf long, dl long, pos_bytes binary",
     )
-    # every affected term's exact NEW df must ride into the encode: the
-    # build's in-group df counting (salted_tf sentinel -1) assumes a group
-    # holds a term's ENTIRE postings, but these groups hold only the
-    # delta — in-group counts would store delta-sized df (and idf-inflated
-    # max_score) on the appended rows.  The affected set is churn-vocab-
-    # sized, so the broadcast stays small even when the full dictionary
-    # would not be.
-    aff_df = dictionary.join(F.broadcast(affected), "term").select(
-        "term", F.col("df").alias("_heavy_df")
-    )
-    tf2 = salted_tf(
-        merged_tf,
-        doclens,
-        dictionary,
-        postings_per_bucket,
-        n_pbuckets,
-        heavy=aff_df,
-    )
-    reenc = encode_postings(tf2, stats.n_docs, avgdl_by_sid)
-    return dict(
+    parts = dict(
         dictionary=dictionary,
         doclens=doclens,
         stats=stats,
-        untouched=untouched,
-        kept_aff=kept_aff,
-        touched_keys=touched_keys,
-        reenc=reenc,
-        tokenizer=tok,
+        untouched=None,
+        kept_aff=None,
+        tokenizer=index.tokenizer,
         tomb=tomb,
-        # persisted intermediates — callers unpersist once the result is
-        # materialized/committed; left cached, successive updates pile up
-        # and EVICT the base index's cache (measured as a bistable 95 s →
-        # 163 s collapse of the update arm in the 1M A/B)
-        cached=[rem_tf, add_tf, doclens, dictionary, touched_keys],
+        n_tomb=len(tomb_ids),
     )
+    # the re-encode is churn-sized: one partition per core, since every
+    # partition costs the decode and encode stages a Python task
+    cores = spark.sparkContext.defaultParallelism
+    if append_only:
+        # blockrows append-only commit: NO touched detection, NO decode —
+        # old postings stay on disk masked by gen-aware doc tombstones at
+        # decode time; only the new docs' postings are encoded
+        parts["touched_keys"] = _local(spark, [], "term string, first_doc_id long")
+        postings_tf = add_tf
+    else:
+        surgical = _surgical(
+            index, affected, aff_lit, tomb, len(tomb_ids), heavy, cores
+        )
+        postings_tf = surgical.pop("survivors").unionByName(add_tf)
+        parts.update(surgical)
+    tf2 = salted_tf(
+        postings_tf, doclens, dictionary, postings_per_bucket, n_pbuckets, heavy=heavy
+    )
+    parts["reenc"] = encode_postings(
+        tf2, stats.n_docs, avgdl_by_sid, num_partitions=cores
+    )
+    return parts
 
 
 def apply_update(
@@ -386,6 +433,13 @@ def apply_update(
     both, a replace.  Preconditions: old_docs ids ⊆ indexed ids; new-only
     ids are not already indexed.
     """
+    if getattr(index, "n_doc_tombstones", 0):
+        raise RuntimeError(
+            "index has pending doc tombstones (append-only commits): "
+            "run blockrows.compact() before apply_update's packed "
+            "assembly (the packed shape cannot express the decode-"
+            "time mask)"
+        )
     p = _update_parts(
         index, old_docs, new_docs, id_col, postings_per_bucket, n_pbuckets
     )
@@ -399,22 +453,12 @@ def apply_update(
         # packed kept_aff's refresh) and inner-joining the new dictionary
         # drops fully-deleted terms' rows.  (The delta-commit path —
         # blockrows.commit_update — never materializes this.)
-        if getattr(index, "n_doc_tombstones", 0):
-            raise RuntimeError(
-                "index has pending doc tombstones (append-only commits): "
-                "run blockrows.compact() before apply_update's packed "
-                "assembly (the packed shape cannot express the decode-"
-                "time mask)"
-            )
         from .blockrows import regroup_rows
 
-        live = index.postings_rows.join(
-            F.broadcast(p["touched_keys"]),
-            ["term", "first_doc_id"],
-            "left_anti",
-        )
+        keys = p["touched_keys"]
+        live = index.postings_rows.join(F.broadcast(keys), keys.columns, "left_anti")
         postings = regroup_rows(live, p["dictionary"]).unionByName(p["reenc"])
-    out = InvertedIndex(
+    return InvertedIndex(
         dictionary=p["dictionary"],
         postings=postings,
         doclens=p["doclens"],
@@ -425,20 +469,3 @@ def apply_update(
         n_pbuckets=n_pbuckets,
         bounds_exact=False,
     )
-    # the persisted intermediates (see _update_parts); release with
-    # release_update_caches(out) once the result is materialized/committed
-    out._update_cached = p["cached"]
-    return out
-
-
-def release_update_caches(index: InvertedIndex) -> None:
-    """Unpersist the intermediates an apply_update result holds.  Call
-    after materializing/committing the result: repeated updates that
-    leave these cached evict the BASE index's cache and collapse update
-    latency (measured 95 s → 163 s across two reps of the 1M A/B)."""
-    for f in getattr(index, "_update_cached", ()):
-        try:
-            f.unpersist()
-        except Exception:
-            pass
-    index._update_cached = ()

@@ -17,7 +17,8 @@ Bytes written = total size of files under the arm's storage dir whose
 mtime >= the commit's start (parquet part files + metadata).
 
 Run: PYTHONPATH=. python tools/ab_update_layout.py
-Env: ABL_DOCS (default 1_000_000), ABL_CHURN_PCT (0.1), ABL_REPS (3).
+Env: ABL_DOCS (default 1_000_000), ABL_CHURN_PCT (0.1), ABL_REPS (3),
+ABL_ARMS (comma-separated subset of the arms; unknown names exit 1).
 """
 import json
 import os
@@ -42,6 +43,18 @@ CHURN_PCT = float(os.environ.get("ABL_CHURN_PCT", "0.1"))
 REPS = int(os.environ.get("ABL_REPS", "3"))
 CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 ROOT = f"/tmp/gs_ab_layout_{N_DOCS}"
+ARM_NAMES = ("rebuild", "packed_commit", "br_surgical", "br_append")
+# ABL_ARMS=rebuild,br_append subsets the arms (large-N runs where the
+# measured-slower packed/surgical arms would dominate the machine time);
+# rebuild stays mandatory — it is the comparison denominator.  Checked
+# before any Spark work: a misspelled arm would otherwise silently vanish
+# from the artifact.
+SELECTED = {a.strip() for a in os.environ.get("ABL_ARMS", "").split(",") if a.strip()}
+if SELECTED - set(ARM_NAMES):
+    sys.exit(
+        f"ABL_ARMS: unknown arm(s) {sorted(SELECTED - set(ARM_NAMES))}; "
+        f"known arms: {', '.join(ARM_NAMES)}"
+    )
 
 spark = get_spark("ab_update_layout", cores=CORES)
 spark.sparkContext.setLogLevel("ERROR")
@@ -136,13 +149,9 @@ ARMS = {
     "br_surgical": lambda: _arm_br("surgical"),
     "br_append": lambda: _arm_br("append_only"),
 }
-# ABL_ARMS=rebuild,br_append subsets the arms (large-N runs where the
-# measured-slower packed/surgical arms would dominate the machine time);
-# rebuild stays mandatory — it is the comparison denominator.
-_sel = os.environ.get("ABL_ARMS")
-if _sel:
-    keep = {a.strip() for a in _sel.split(",")} | {"rebuild"}
-    ARMS = {a: fn for a, fn in ARMS.items() if a in keep}
+assert tuple(ARMS) == ARM_NAMES
+if SELECTED:
+    ARMS = {a: fn for a, fn in ARMS.items() if a in SELECTED | {"rebuild"}}
 
 res = {a: {"s": [], "bytes": []} for a in ARMS}
 order = list(ARMS)

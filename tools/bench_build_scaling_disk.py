@@ -55,12 +55,15 @@ sys.path.insert(0, %(repo)r)
 os.environ["SPARK_GRAFT_CPUS"] = str(%(cores)d)
 from groonga_spark.session import get_spark
 from groonga_spark.index.build import build_index
+corpus_bytes = sum(
+    os.path.getsize(os.path.join(d, f))
+    for d, _, files in os.walk(%(corpus)r)
+    for f in files if f.endswith(".parquet")
+)
+if corpus_bytes <= 0:
+    sys.exit("no .parquet files under %(corpus)s: cannot size scan splits")
 spark = get_spark("scale_disk_%(cores)d", cores=%(cores)d)
 spark.sparkContext.setLogLevel("ERROR")
-corpus_bytes = sum(
-    os.path.getsize(os.path.join(%(corpus)r, f))
-    for f in os.listdir(%(corpus)r) if f.endswith(".parquet")
-)
 split = max(16 << 20, min(128 << 20, corpus_bytes // (%(cores)d * %(waves)d)))
 spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
 corpus = spark.read.parquet(%(corpus)r)
@@ -117,6 +120,7 @@ def main() -> None:
         spark.stop()
 
     runs: dict[int, list[float]] = {LO: [], HI: []}
+    driver_mem: dict[int, str] = {}  # effective heap per level (env may preset it)
     for rep in range(REPS):
         for cores in (LO, HI):
             code = _WORKER % {
@@ -134,6 +138,7 @@ def main() -> None:
             # sort/shuffle spill the N build never sees — that asymmetry
             # is a sandbox artifact, not a property of the job.
             env.setdefault("SPARK_DRIVER_MEM", f"{cores * MEM_PER_CORE_GB}g")
+            driver_mem[cores] = env["SPARK_DRIVER_MEM"]
             out = subprocess.run(
                 [sys.executable, "-c", code],
                 env=env,
@@ -167,9 +172,7 @@ def main() -> None:
                 "n_docs": N_DOCS,
                 "mem_per_core_gb": MEM_PER_CORE_GB,
                 "waves_per_core": WAVES_PER_CORE,
-                "driver_mem": {
-                    str(c): f"{c * MEM_PER_CORE_GB}g" for c in (LO, HI)
-                },
+                "driver_mem": {str(c): driver_mem[c] for c in (LO, HI)},
                 "build_files_per_sec": {"N": fps[LO], "4N": fps[HI]},
                 "build_secs": {str(c): runs[c] for c in (LO, HI)},
                 "hardware_ceiling_same_pair": ceil,

@@ -47,7 +47,7 @@ def t(label, fn):
 
 
 total0 = time.perf_counter()
-p = t("parts (eager: counts + sec_rows)", lambda: _update_parts(eng.index, old_docs, new_docs))
+p = t("parts (eager: batch collect + touched-block checkpoint)", lambda: _update_parts(eng.index, old_docs, new_docs))
 t("dictionary count", lambda: p["dictionary"].count())
 t("touched_keys count", lambda: p["touched_keys"].count())
 t("reenc count", lambda: p["reenc"].count())
